@@ -3185,9 +3185,13 @@ def oracle_sql() -> dict[str, str]:
         # raw noisy substrings — merge AND split branches live. Per
         # token: TOP lookup (distance, count DESC, term); merge gate
         # (combi_dist+1 vs best1+best2 with the naive-Bayes count
-        # tie-break and is_last_combi carry); stateful split_best scan
-        # over split points in j order (the skip / invalidate / count-
-        # compare state machine), Naive-Bayes split count
+        # tie-break and is_last_combi carry); split_best, the result of
+        # the reference's skip / invalidate / count-compare scan over
+        # split points in j order: the first candidate (exact lookup
+        # first, then j) with the least distance, then the highest
+        # count, taken with row_number (a list_reduce lambda here
+        # returned values from other rows on DuckDB 1.0.0 when the
+        # query ran over many documents); Naive-Bayes split count
         # trunc(p1/N*p2) (no bigram table => the bigram_count_min
         # branch, 2^63-1, never binds); unknown fallback
         # (term, d+1, 10//10^len). The sequential fold is a recursive
@@ -3262,12 +3266,20 @@ def oracle_sql() -> dict[str, str]:
         JOIN lut l1 ON l1.query = sr.part1
         JOIN lut l2 ON l2.query = sr.part2
     ),
-    split_red AS (
-        SELECT ss.term1,
-               list(struct_pack(has := true, term := ss.tmp_term,
-                                dist := ss.tmp_dist,
-                                cnt := ss.tmp_cnt) ORDER BY ss.j) AS cands
-        FROM split_scored ss GROUP BY ss.term1
+    split_best AS (
+        SELECT term1, term, dist, cnt FROM (
+            SELECT *, row_number() OVER (
+                       PARTITION BY term1 ORDER BY dist, cnt DESC, ord) AS rn
+            FROM (
+                SELECT o.term1, ls.s_term AS term, ls.s_dist AS dist,
+                       CAST(ls.s_count AS DOUBLE) AS cnt, 0 AS ord
+                FROM (SELECT DISTINCT term1 FROM toks
+                      WHERE length(term1) > 1) o
+                JOIN lut ls ON ls.query = o.term1
+                UNION ALL
+                SELECT term1, tmp_term, tmp_dist, tmp_cnt, j FROM split_scored
+            )
+        ) WHERE rn = 1
     ),
     rowsx AS (
         SELECT t.doc_id, t.pos, t.term1,
@@ -3286,45 +3298,19 @@ def oracle_sql() -> dict[str, str]:
                  THEN struct_pack(term := ls.s_term,
                                   dist := ls.s_dist,
                                   cnt := CAST(ls.s_count AS DOUBLE))
+                 WHEN length(t.term1) > 1 AND sb.term IS NOT NULL
+                 THEN struct_pack(term := sb.term, dist := sb.dist,
+                                  cnt := sb.cnt)
                  WHEN length(t.term1) > 1
-                 THEN (
-                     SELECT CASE WHEN fin.has
-                            THEN struct_pack(term := fin.term,
-                                             dist := fin.dist,
-                                             cnt := fin.cnt)
-                            ELSE struct_pack(term := t.term1,
-                                             dist := CAST(3 AS INTEGER),
-                                             cnt := 0.0) END
-                     FROM (
-                         SELECT list_reduce(
-                             list_prepend(
-                                 struct_pack(
-                                     has := ls.s_term IS NOT NULL,
-                                     term := COALESCE(ls.s_term, ''),
-                                     dist := COALESCE(ls.s_dist, CAST(999 AS INTEGER)),
-                                     cnt := CASE WHEN ls.s_term IS NOT NULL
-                                                 THEN CAST(ls.s_count AS DOUBLE)
-                                                 ELSE -1.0 END),
-                                 COALESCE(sr.cands,
-                                          CAST([] AS STRUCT(has BOOLEAN,
-                                               term VARCHAR, dist INTEGER,
-                                               cnt DOUBLE)[]))),
-                             (acc, c) -> CASE
-                                 WHEN acc.has AND c.dist > acc.dist THEN acc
-                                 WHEN (NOT acc.has) OR c.dist < acc.dist
-                                      OR c.cnt > acc.cnt
-                                 THEN struct_pack(has := true, term := c.term,
-                                                  dist := c.dist, cnt := c.cnt)
-                                 ELSE acc END) AS fin
-                     )
-                 )
+                 THEN struct_pack(term := t.term1, dist := CAST(3 AS INTEGER),
+                                  cnt := 0.0)
                  ELSE struct_pack(term := t.term1, dist := CAST(3 AS INTEGER),
                                   cnt := 1.0)
                END AS part_nm
         FROM toks t
         LEFT JOIN lut ls ON ls.query = t.term1
         LEFT JOIN lut lc ON lc.query = t.combo
-        LEFT JOIN split_red sr ON sr.term1 = t.term1
+        LEFT JOIN split_best sb ON sb.term1 = t.term1
     ),
     fold AS (
         SELECT doc_id, -1 AS t,

@@ -26,19 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import host_bw_probe  # noqa: E402
 from symspellpy_spark.session import get_spark  # noqa: E402
-
-
-def probe(seconds: float = 2.0) -> int:
-    import numpy as np
-
-    a = np.arange(8 * 1024 * 1024, dtype=np.uint64)
-    t_end = time.time() + seconds
-    reps = 0
-    while time.time() < t_end:
-        (a * np.uint64(2862933555777941757)).min()
-        reps += 1
-    return int(reps * (5.0 / seconds))
 
 
 def _corpus(spark, n_docs: int):
@@ -84,7 +73,7 @@ def cmd_phases() -> None:
 
     pages = _corpus(spark, n_docs)
     _warm(spark)
-    out: dict = {"probe": probe(), "docs": n_docs, "cpus": cpus}
+    out: dict = {"probe": host_bw_probe(2.0), "docs": n_docs, "cpus": cpus}
 
     def noop(df):
         df.write.format("noop").mode("overwrite").save()
@@ -149,7 +138,7 @@ def cmd_phases() -> None:
         reps=1)
     timed("full_clusters_metrics_on", lambda: DedupPipeline(
         spark, DedupConfig()).clusters(pages).count(), reps=1)
-    out["probe_end"] = probe()
+    out["probe_end"] = host_bw_probe(2.0)
     import json
 
     print(json.dumps(out))
@@ -164,7 +153,7 @@ def cmd_pipeline(reps: int = 2) -> None:
 
     pages = _corpus(spark, n_docs)
     _warm(spark)
-    p0 = probe()
+    p0 = host_bw_probe(2.0)
     best = None
     for _ in range(reps):
         pipe = DedupPipeline(spark, DedupConfig())
@@ -181,7 +170,7 @@ def cmd_pipeline(reps: int = 2) -> None:
     import json
 
     print(json.dumps({
-        "probe": p0, "probe_end": probe(), "docs": n_docs, "cpus": cpus,
+        "probe": p0, "probe_end": host_bw_probe(2.0), "docs": n_docs, "cpus": cpus,
         "signatures": round(best[0], 3), "edges": round(best[1], 3),
         "clusters": round(best[2], 3), "total": round(best[3], 3),
     }))

@@ -7,6 +7,7 @@ execution model.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 from enum import Enum, IntEnum
 
@@ -54,7 +55,11 @@ class EngineConfig:
 
     max_dictionary_edit_distance / prefix_length / count_threshold mirror
     reference symspellpy.py:84-102 (defaults 2, 7, 1); validation mirrors
-    symspellpy.py:92-99.
+    symspellpy.py:92-99. ``distance_comparer`` is the USER_PROVIDED
+    kernel ``(s1: pd.Series, s2: pd.Series, max_distance) -> pd.Series``
+    returning -1 above ``max_distance`` (reference
+    abstract_distance_comparer.py:4-23); it is not persisted by
+    ``SparkDictionary.save``.
     """
 
     max_dictionary_edit_distance: int = 2
@@ -62,6 +67,7 @@ class EngineConfig:
     count_threshold: int = 1
     distance_algorithm: DistanceAlgorithm = DistanceAlgorithm.DAMERAU_OSA
     corpus_n: int = DEFAULT_CORPUS_N
+    distance_comparer: Callable | None = None
 
     def __post_init__(self) -> None:
         if self.max_dictionary_edit_distance < 0:
@@ -73,3 +79,10 @@ class EngineConfig:
             raise ValueError("prefix_length cannot be less than 1 or smaller than max_dictionary_edit_distance")
         if self.count_threshold < 0:
             raise ValueError("count_threshold cannot be negative")
+        if (self.distance_algorithm == DistanceAlgorithm.USER_PROVIDED) != (
+            self.distance_comparer is not None
+        ):
+            raise ValueError(
+                "distance_comparer is required by, and only valid with, "
+                "DistanceAlgorithm.USER_PROVIDED"
+            )

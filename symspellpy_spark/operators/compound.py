@@ -22,15 +22,16 @@ single SuggestItem) plus the ``_replaced_words`` audit as a map column
 (the reference hides it in mutable state, symspellpy.py:733,837-851 —
 in Spark it must be a returned result).
 
-Strategies: the default (``strategy="auto"``) mirrors fuzzy
-segmentation's worker-local shape — the delete-neighborhood index is
-built once on the driver (operators/neighborhood.py), broadcast, and
-every inner TOP lookup resolves inside the ``mapInPandas`` kernel with
-a cross-batch cache, so a document never leaves its partition (no
-token explode, no LUT joins, no groupBy shuffle). Tokenization stays
-JVM-side (``parse_words_expr``) for byte parity with the relational
-path. Above ``broadcast_vocab_limit`` (or for USER_PROVIDED distance)
-the relational staged-lookup shape below takes over automatically.
+Paths: by default the operator mirrors fuzzy segmentation's
+worker-local shape — the delete-neighborhood index is built once on
+the driver (operators/neighborhood.py), broadcast, and every inner TOP
+lookup resolves inside the ``mapInPandas`` kernel with a cross-batch
+cache, so a document never leaves its partition (no token explode, no
+LUT joins, no groupBy shuffle). Tokenization stays JVM-side
+(``parse_words_expr``) for byte parity with the relational path. A
+vocabulary or bigram table above ``BROADCAST_VOCAB_LIMIT`` rows, or a
+USER_PROVIDED distance, takes the relational staged-lookup shape
+instead.
 """
 
 from __future__ import annotations
@@ -202,42 +203,59 @@ def lookup_compound_batch(
     ignore_term_with_digits: bool = False,
     doc_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
-    broadcast_vocab_limit: int = 1_000_000,
 ) -> DataFrame:
-    """-> one row per document: (doc_id, term, distance, count, replacements)."""
-    cfg = dictionary.config
+    """-> one row per document: (doc_id, term, distance, count, replacements).
+
+    Runs the worker-local kernel when the distance is a built-in kernel
+    and the vocabulary and bigram table each hold at most
+    ``BROADCAST_VOCAB_LIMIT`` rows; otherwise every inner lookup goes
+    through the relational delete-join."""
+    from symspellpy_spark.operators import neighborhood
+
     if max_edit_distance is None:
-        max_edit_distance = cfg.max_dictionary_edit_distance
+        max_edit_distance = dictionary.config.max_dictionary_edit_distance
+    args = (
+        docs,
+        dictionary,
+        max_edit_distance,
+        ignore_non_words,
+        transfer_casing,
+        split_by_space,
+        ignore_term_with_digits,
+        doc_col,
+        text_col,
+    )
+    limit = neighborhood.BROADCAST_VOCAB_LIMIT
+    if (
+        dictionary.config.distance_algorithm
+        in (DistanceAlgorithm.LEVENSHTEIN, DistanceAlgorithm.DAMERAU_OSA)
+        and dictionary.num_terms <= limit
+    ):
+        bigram_bc, bigrams_fit = _bigram_broadcast(
+            docs.sparkSession, dictionary, limit
+        )
+        if bigrams_fit:
+            return _compound_broadcast(*args, bigram_bc)
+    return _compound_relational(*args)
+
+
+def _compound_relational(
+    docs: DataFrame,
+    dictionary: SparkDictionary,
+    max_edit_distance: int,
+    ignore_non_words: bool,
+    transfer_casing: bool,
+    split_by_space: bool,
+    ignore_term_with_digits: bool,
+    doc_col: str,
+    text_col: str,
+) -> DataFrame:
+    """Staged-lookup shape: token explode, one shared TOP lookup over
+    every distinct string, LUT joins, and a per-document fold."""
+    cfg = dictionary.config
     n_const = float(cfg.corpus_n)
     bigram_min = dictionary.bigram_count_min
     algo = cfg.distance_algorithm
-
-    # worker-local fast path: vocabulary (and bigram table) must fit in
-    # a broadcast — above the limit the relational shape below routes
-    # every inner lookup through the distributed delete-join instead
-    if (
-        strategy != "relational"
-        and algo
-        in (DistanceAlgorithm.LEVENSHTEIN, DistanceAlgorithm.DAMERAU_OSA)
-        and dictionary.num_terms <= broadcast_vocab_limit
-    ):
-        bigram_bc, bigrams_fit = _bigram_broadcast(
-            docs.sparkSession, dictionary, broadcast_vocab_limit
-        )
-        if bigrams_fit:
-            return _compound_broadcast(
-                docs,
-                dictionary,
-                max_edit_distance,
-                ignore_non_words,
-                transfer_casing,
-                split_by_space,
-                ignore_term_with_digits,
-                doc_col,
-                text_col,
-                bigram_bc,
-            )
 
     docs = docs.select(
         F.col(doc_col).alias("doc_id"), F.col(text_col).alias("phrase")
@@ -374,7 +392,7 @@ def lookup_compound_batch(
         .withColumn("tmp_term", F.concat_ws(" ", F.col("p1_term"), F.col("p2_term")))
     )
 
-    dist = distance_udf(algo, max_edit_distance)
+    dist = distance_udf(algo, max_edit_distance, cfg.distance_comparer)
     splits = splits.withColumn("tmp_dist", dist(F.col("term1"), F.col("tmp_term")))
     if dictionary.bigrams is not None:
         splits = splits.join(
@@ -411,7 +429,7 @@ def lookup_compound_batch(
 
     # ---- per-document sequential fold ----
     max_ed = max_edit_distance
-    pair_kernel = (
+    pair_kernel = cfg.distance_comparer or (
         levenshtein_batch
         if algo == DistanceAlgorithm.LEVENSHTEIN
         else damerau_osa_batch
@@ -503,7 +521,7 @@ def _bigram_broadcast(spark, dictionary: SparkDictionary, limit: int):
     """-> ``(broadcast({bigram: count}) | None, fits)``.
 
     ``fits=False`` means the bigram table exceeds ``limit`` rows and the
-    caller must use the relational strategy (joins against the
+    caller must use the relational path (joins against the
     distributed bigram table) instead of a broadcast dict. The size
     probe is ``limit(n+1).collect()`` — when it returns <= n rows that
     IS the whole table, so no separate count job runs.

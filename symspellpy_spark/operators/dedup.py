@@ -1566,7 +1566,6 @@ def winnowing_fingerprints(
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_family: str = "xxhash64",
-    strategy: str = "auto",
     positions: bool = True,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
@@ -1579,7 +1578,34 @@ def winnowing_fingerprints(
     complements MinHash (set overlap) and the content-defined substring
     pass (exact long matches).
 
-    Pure Catalyst, join-free: posexplode grams -> JVM hash -> ONE
+    Paths: xxhash64 with ``k < 32`` (the production default) runs a
+    DOC-LOCAL Arrow kernel — vectorized XXH64 over every gram plus a
+    strided rolling-min — with NO explode and NO shuffle; its only plan
+    node is a mapInPandas over (id, text). ``hash_family="md5"`` swaps
+    the gram hash for a 60-bit md5 prefix that DuckDB computes
+    identically — the oracle family — and, like ``k >= 32``, takes the
+    relational window formulation (:func:`_winnowing_relational`);
+    equivalence of the two paths is pinned by tests.
+    """
+    if hash_family == "xxhash64" and k < 32:
+        return _winnowing_kernel(
+            docs, k, window, id_col, text_col, positions=positions
+        )
+    return _winnowing_relational(
+        docs, k, window, id_col, text_col, hash_family, positions
+    )
+
+
+def _winnowing_relational(
+    docs: DataFrame,
+    k: int,
+    window: int,
+    id_col: str,
+    text_col: str,
+    hash_family: str,
+    positions: bool,
+) -> DataFrame:
+    """Pure Catalyst, join-free: posexplode grams -> JVM hash -> ONE
     sliding-window pass (ROWS BETWEEN CURRENT AND window-1 FOLLOWING)
     computing ``min(struct(h, -p))`` — struct ordering gives the min
     hash first and, among ties, the max position (rightmost) — then
@@ -1588,24 +1614,10 @@ def winnowing_fingerprints(
     grams equi-keyed on (id, h==wmin); on boilerplate-heavy documents
     where one gram hash dominates that join degenerates toward O(L²)
     rows per document, so it was replaced by this single window pass
-    (same results, linear in document length, skew-safe).
-    ``hash_family="md5"`` swaps the gram hash for a 60-bit md5 prefix
-    that DuckDB computes identically — the oracle family; xxhash64 is
-    the production default.
-
-    Strategies: the default (``auto``, xxhash64, k < 32) runs a
-    DOC-LOCAL Arrow kernel — vectorized XXH64 over every gram plus a
-    strided rolling-min — with NO explode and NO shuffle: the
-    relational formulation shuffles+sorts one row per character for
-    its window (petabytes at web scale), while the kernel's only plan
-    node is a mapInPandas over (id, text). ``strategy="relational"``
-    (and the md5 family, which exists for the DuckDB oracle) keeps the
-    Catalyst window formulation; equivalence is pinned by tests.
+    (same results, linear in document length, skew-safe). It shuffles
+    and sorts one row per character, so it is the oracle/fallback
+    path, not the production one.
     """
-    if hash_family == "xxhash64" and strategy != "relational" and k < 32:
-        return _winnowing_kernel(
-            docs, k, window, id_col, text_col, positions=positions
-        )
     from pyspark.sql import Window as W
 
     d = docs.select(

@@ -189,8 +189,8 @@ class SparkDictionary:
     def num_terms(self) -> int:
         """Vocabulary size (cached). Gates the broadcast-collect fast
         paths: a web-scale vocabulary must not be collected to the
-        driver, so segmentation/lookup fall back to their relational
-        shapes above ``broadcast_vocab_limit``."""
+        driver, so segmentation and compound take their relational
+        shapes above ``neighborhood.BROADCAST_VOCAB_LIMIT``."""
         if self._num_terms is None:
             self._num_terms = self.words.count()
         return self._num_terms

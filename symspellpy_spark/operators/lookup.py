@@ -163,6 +163,14 @@ def lookup_batch(
                 out = cand.withColumn("distance", lv).where(
                     F.col("distance") >= 0
                 )
+            elif cfg.distance_algorithm == DistanceAlgorithm.USER_PROVIDED:
+                # no Levenshtein shortcut holds for an arbitrary kernel
+                dist = distance_udf(
+                    cfg.distance_algorithm, bound, cfg.distance_comparer
+                )
+                out = cand.withColumn(
+                    "distance", dist(F.col("phrase"), F.col("term"))
+                ).where(F.col("distance").between(0, bound))
             else:
                 withlv = cand.withColumn("__lv", lv)
                 easy = withlv.where(

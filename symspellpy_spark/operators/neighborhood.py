@@ -1,7 +1,7 @@
 """Broadcastable vectorized delete-neighborhood index.
 
 The worker-local fuzzy kernels (``segmentation.py``,
-``local_lookup.py``) resolve out-of-vocabulary queries with the
+``compound.py``) resolve out-of-vocabulary queries with the
 symmetric-delete trick (reference symspellpy.py:1038-1068): a query
 matches a term at OSA distance <= d only if they share a bounded-depth
 delete key. Round 2 built those delete indexes as Python dicts INSIDE
@@ -22,20 +22,20 @@ can only ADD a false candidate, which the exact distance verify that
 always follows filters out — so hashing never changes results.
 
 Scale note: the driver-side build is a Python loop over the vocabulary
-(~7 s at 82k terms, linear in vocab size). Callers gate on
-``broadcast_vocab_limit`` (default 1M terms) and fall back to the
-relational delete-join path above it, so the driver never builds an
-index for a web-scale vocabulary.
+(~7 s at 82k terms, linear in vocab size). Callers take the worker-local
+path only while the vocabulary has at most ``BROADCAST_VOCAB_LIMIT``
+terms and route to the relational delete-join path above it, so the
+driver never builds an index for a web-scale vocabulary.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
 
 __all__ = [
+    "BROADCAST_VOCAB_LIMIT",
     "FuzzyIndex",
     "TopResolver",
     "build_fuzzy_index",
@@ -46,6 +46,10 @@ __all__ = [
     "within_one",
     "worker_resolver",
 ]
+
+# largest vocabulary (and bigram table) the worker-local operator paths
+# collect to the driver and broadcast; above it they run relationally
+BROADCAST_VOCAB_LIMIT = 1_000_000
 
 _FNV_OFF = np.uint64(14695981039346656037)
 _FNV_PRIME = np.uint64(1099511628211)
@@ -454,15 +458,6 @@ _RESOLVER_CACHE_CAP = 4_000_000
 # int16 rows per chunk keep the transient diff matrix ~100 MB
 _BAG_CHUNK = 2_000_000
 
-# A/B measurement hook (jobs/ab_bag_prefilter.py): the bag prefilter is
-# a pure prune of provably-non-matching pairs — results are identical
-# either way (test_top_resolver_matches_bruteforce) — so this toggle
-# exists only to measure the prefilter's payoff, never to change
-# semantics. Read at worker import time; local mode inherits the
-# launching process's environment.
-_BAG_PREFILTER = os.environ.get("SGRAFT_BAG_PREFILTER", "1") != "0"
-
-
 def char_bags(strings, cap: int) -> np.ndarray:
     """(n, 27) int16 character-bag signatures: counts per bucket
     a..z (0..25) + everything-else (26), over the first ``cap`` chars.
@@ -588,7 +583,7 @@ class TopResolver:
         mq = [qlist[i] for i in miss]
         mlens = qlens[np.asarray(miss, dtype=np.int64)]
         pair_mi, pair_tid = index.deep_pairs(mq, mlens)
-        if len(pair_mi) > 0 and _BAG_PREFILTER:
+        if len(pair_mi) > 0:
             # character-bag lower-bound prefilter (see char_bags): on the
             # d=2 segmentation workload it prunes ~59% of deep pairs
             # before the DP kernel for ~5% of the kernel's cost. Term
@@ -672,10 +667,10 @@ def worker_resolver(idx_bc, token: str, kernel, transpositions: bool,
 
 def cached_driver_value(cache: dict, owner, extra_key: tuple, build):
     """Driver-side once-per-owner cache shared by every broadcast-reuse
-    site (the fuzzy index here, ``local_lookup``'s words map,
-    ``compound``'s bigram map): -> ``(value, token)`` keyed on
-    ``(id(owner), *extra_key)``, validated with a weakref so a new
-    object reusing a dead owner's address can never hit its entry.
+    site (the fuzzy index here, ``compound``'s bigram map): ->
+    ``(value, token)`` keyed on ``(id(owner), *extra_key)``, validated
+    with a weakref so a new object reusing a dead owner's address can
+    never hit its entry.
 
     ``build()`` runs once per live (owner, key). The token is a driver
     uuid generated with the value — worker-side state must key on it,

@@ -37,20 +37,19 @@ narrow pass over the corpus, zero exchanges, cost linear in
 documents; a 1000-executor cluster sees no shuffle at all. The
 round-4 relational formulation (explode every gram occurrence STRING
 across all 9 ``n`` values, hash-aggregate, join coverage back) is
-retained as ``strategy="relational"`` because its Catalyst expressions
-evaluate ANY Java-regex ``token_re``; the kernel tokenizes with Python
-``re``, so ``strategy="auto"`` (the default) picks the kernel exactly
-when ``token_re`` is the default ``[a-z0-9]+`` — a pattern with
-identical semantics in Java, Python and DuckDB — and falls back to
-relational otherwise. Both strategies produce bit-identical rows
-(``tests/test_quality.py::test_kernel_matches_relational``): counts
-are exact integers, each fraction one IEEE division, and the top-gram
-tie-break (count, then char length, then codepoint order — Python str
-``<`` equals Spark's UTF8String binary order) is replicated exactly.
-Same-phase interleaved A/B on the composed corpus job's exact gopher
-stage (``jobs/ab_gopher_kernel.py`` -> ``BENCH_AB_GOPHER_r05.json``):
-relational 24.5 s vs kernel 1.0 s best-of — **24x** — with identical
-survivor counts in every cell.
+retained because its Catalyst expressions evaluate ANY Java-regex
+``token_re``; the kernel tokenizes with Python ``re``, so the operators
+run the kernel exactly when ``token_re`` is the default ``[a-z0-9]+``
+— a pattern with identical semantics in Java, Python and DuckDB — and
+the relational path for any other pattern. Both paths produce
+bit-identical rows (``tests/test_quality.py::test_kernel_matches_relational``):
+counts are exact integers, each fraction one IEEE division, and the
+top-gram tie-break (count, then char length, then codepoint order —
+Python str ``<`` equals Spark's UTF8String binary order) is replicated
+exactly. On the composed corpus job's exact gopher stage at
+``local[32]`` the kernel measured 1.0 s against the relational path's
+24.5 s, best-of, with identical survivor counts
+(``BENCH_AB_GOPHER_r05.json``).
 """
 
 from __future__ import annotations
@@ -191,27 +190,12 @@ def _kernel_frames(pdf: pd.DataFrame, ns: Sequence[int], rx) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _pick_kernel(strategy: str, token_re: str) -> bool:
-    """auto -> kernel iff ``token_re`` is the default ``[a-z0-9]+``
-    (identical semantics in Java regex, Python ``re`` and DuckDB);
-    any other Java-regex pattern keeps the relational path, whose
-    Catalyst expressions evaluate it natively."""
-    if strategy == "auto":
-        return token_re == _DEFAULT_TOKEN_RE
-    if strategy in ("kernel", "relational"):
-        return strategy == "kernel"
-    raise ValueError(
-        f"strategy must be auto|kernel|relational, got {strategy!r}"
-    )
-
-
 def gopher_ngram_stats(
     docs: DataFrame,
     ns: Sequence[int] = (2, 3, 4, 5, 6, 7, 8, 9, 10),
     token_re: str = _DEFAULT_TOKEN_RE,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """-> (id, n, n_grams, n_distinct, top_count, top_frac, dup_frac,
     doc_chars, top_char_frac, dup_char_frac): within-document n-gram
@@ -240,25 +224,38 @@ def gopher_ngram_stats(
     """
     if not ns or any(n < 1 for n in ns):
         raise ValueError(f"ns must be non-empty positive ints, got {ns!r}")
-    if _pick_kernel(strategy, token_re):
-        ns_t = tuple(int(n) for n in ns)
-        rx = _re.compile(token_re)
-        schema = T.StructType(
-            [T.StructField("id", docs.schema[id_col].dataType)]
-            + [T.StructField(f, t) for f, t in _STATS_FIELDS]
-        )
-        narrow = docs.select(
-            F.col(id_col).alias("__id"),
-            F.lower(F.col(text_col)).alias("__text"),
-        )
+    if token_re != _DEFAULT_TOKEN_RE:
+        return _ngram_stats_relational(docs, ns, token_re, id_col, text_col)
+    ns_t = tuple(int(n) for n in ns)
+    rx = _re.compile(token_re)
+    schema = T.StructType(
+        [T.StructField("id", docs.schema[id_col].dataType)]
+        + [T.StructField(f, t) for f, t in _STATS_FIELDS]
+    )
+    narrow = docs.select(
+        F.col(id_col).alias("__id"),
+        F.lower(F.col(text_col)).alias("__text"),
+    )
 
-        def gen(batches):
-            for pdf in batches:
-                frame = _kernel_frames(pdf, ns_t, rx)
-                if len(frame):
-                    yield frame
+    def gen(batches):
+        for pdf in batches:
+            frame = _kernel_frames(pdf, ns_t, rx)
+            if len(frame):
+                yield frame
 
-        return narrow.mapInPandas(gen, schema)
+    return narrow.mapInPandas(gen, schema)
+
+
+def _ngram_stats_relational(
+    docs: DataFrame,
+    ns: Sequence[int],
+    token_re: str,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """``gopher_ngram_stats`` as Catalyst expressions: evaluates any
+    Java-regex ``token_re``, at the cost of exploding and shuffling one
+    row per gram occurrence."""
     toks = docs.select(
         F.col(id_col).alias("id"),
         F.regexp_extract_all(
@@ -364,7 +361,6 @@ def gopher_quality_filter(
     token_re: str = _DEFAULT_TOKEN_RE,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """-> (id, keep): the repetition-filter verdict per document.
 
@@ -389,58 +385,69 @@ def gopher_quality_filter(
     effectively does.
     """
     th = thresholds or GOPHER_THRESHOLDS
-    ns = sorted({*th.get("top_char_frac", {}), *th.get("dup_char_frac", {})})
+    if token_re != _DEFAULT_TOKEN_RE:
+        return _quality_filter_relational(docs, th, token_re, id_col, text_col)
+    ns, top_map, dup_map = _threshold_maps(th)
+    # doc-local verdict: the kernel already sees every (doc, n) row
+    # contiguously, so the per-doc reduction folds into the same
+    # narrow pass — zero exchanges, one output row per input row,
+    # short/empty docs keep=True with no join-back needed
+    ns_t = tuple(int(n) for n in ns)
+    rx = _re.compile(token_re)
+    schema = T.StructType(
+        [
+            T.StructField("id", docs.schema[id_col].dataType),
+            T.StructField("keep", T.BooleanType()),
+        ]
+    )
+    narrow = docs.select(
+        F.col(id_col).alias("__id"),
+        F.lower(F.col(text_col)).alias("__text"),
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            out_id, out_keep = [], []
+            for did, txt in zip(pdf["__id"], pdf["__text"]):
+                tokens = rx.findall(txt) if isinstance(txt, str) else []
+                keep = True
+                for n, m, nd, tc, tclen, dch, doc_chars in (
+                    _doc_ngram_rows(tokens, ns_t)
+                ):
+                    bar = top_map.get(n)
+                    if bar is not None and tc * tclen / doc_chars > bar:
+                        keep = False
+                        break
+                    bar = dup_map.get(n)
+                    if bar is not None and dch / doc_chars > bar:
+                        keep = False
+                        break
+                out_id.append(did)
+                out_keep.append(keep)
+            if out_id:
+                yield pd.DataFrame({"id": out_id, "keep": out_keep})
+
+    return narrow.mapInPandas(gen, schema)
+
+
+def _threshold_maps(th: dict[str, dict[int, float]]):
+    """-> (every configured n, top-n bars, dup-n bars)."""
     top_map = th.get("top_char_frac", {})
     dup_map = th.get("dup_char_frac", {})
-    if _pick_kernel(strategy, token_re):
-        # doc-local verdict: the kernel already sees every (doc, n) row
-        # contiguously, so the per-doc reduction folds into the same
-        # narrow pass — zero exchanges, one output row per input row,
-        # short/empty docs keep=True with no join-back needed
-        ns_t = tuple(int(n) for n in ns)
-        rx = _re.compile(token_re)
-        schema = T.StructType(
-            [
-                T.StructField("id", docs.schema[id_col].dataType),
-                T.StructField("keep", T.BooleanType()),
-            ]
-        )
-        narrow = docs.select(
-            F.col(id_col).alias("__id"),
-            F.lower(F.col(text_col)).alias("__text"),
-        )
+    return sorted({*top_map, *dup_map}), top_map, dup_map
 
-        def gen(batches):
-            for pdf in batches:
-                out_id, out_keep = [], []
-                for did, txt in zip(pdf["__id"], pdf["__text"]):
-                    tokens = rx.findall(txt) if isinstance(txt, str) else []
-                    keep = True
-                    for n, m, nd, tc, tclen, dch, doc_chars in (
-                        _doc_ngram_rows(tokens, ns_t)
-                    ):
-                        bar = top_map.get(n)
-                        if bar is not None and tc * tclen / doc_chars > bar:
-                            keep = False
-                            break
-                        bar = dup_map.get(n)
-                        if bar is not None and dch / doc_chars > bar:
-                            keep = False
-                            break
-                    out_id.append(did)
-                    out_keep.append(keep)
-                if out_id:
-                    yield pd.DataFrame({"id": out_id, "keep": out_keep})
 
-        return narrow.mapInPandas(gen, schema)
-    stats = gopher_ngram_stats(
-        docs,
-        ns=ns,
-        token_re=token_re,
-        id_col=id_col,
-        text_col=text_col,
-        strategy="relational",
-    )
+def _quality_filter_relational(
+    docs: DataFrame,
+    th: dict[str, dict[int, float]],
+    token_re: str,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """``gopher_quality_filter`` over the relational stats: one
+    aggregation reduces the long-form rows to a verdict per document."""
+    ns, top_map, dup_map = _threshold_maps(th)
+    stats = _ngram_stats_relational(docs, ns, token_re, id_col, text_col)
     viol = F.lit(False)
     for n, t in sorted(top_map.items()):
         viol = viol | ((F.col("n") == n) & (F.col("top_char_frac") > t))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
 from symspellpy_spark.config import DistanceAlgorithm, Verbosity
+from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
 from symspellpy_spark.operators.lookup import lookup_batch
 from symspellpy_spark.operators.neighborhood import (
@@ -56,68 +57,66 @@ def word_segmentation_batch(
     ignore_pattern: str | None = None,
     doc_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
-    broadcast_vocab_limit: int = 1_000_000,
 ) -> DataFrame:
     """-> (doc_id, segmented_string, corrected_string, distance_sum,
     log_prob_sum) — one row per document (the reference's Composition).
 
-    At ``max_edit_distance=0`` every inner lookup is a plain membership
-    probe, so instead of exploding O(len * max_word_len) substring rows
-    into a join + shuffle, the words table is broadcast as a plain dict
-    into a ``mapInPandas`` kernel and the whole DP runs doc-local —
-    same results, no per-substring relation.
+    While the vocabulary holds at most ``BROADCAST_VOCAB_LIMIT`` terms
+    the whole DP runs doc-local in a ``mapInPandas`` kernel, with no
+    per-substring relation:
 
-    For fuzzy (d > 0) segmentation the default (``strategy="auto"``) is
-    the broadcast-LUT path: ONE relational ``lookup_batch`` over the
-    corpus's *distinct* part strings (the delete index does its job
-    exactly once per distinct string), then only the FOUND entries are
-    broadcast as a dict and the DP runs doc-local. Unknown parts never
-    need the LUT — their score is the closed unknown-word formula — so
-    the broadcast is bounded by |distinct substrings within d of the
-    vocabulary| (≈ vocab × neighborhood, NOT corpus size). Pass
-    ``strategy="relational"`` to shuffle every scored (doc, j, i) cell
-    into a per-document ``applyInPandas`` fold instead — the shape to
-    use when the found-part set itself is too large to broadcast.
+    - at ``max_edit_distance=0`` every inner lookup is a plain
+      membership probe against the words table, broadcast as a dict;
+    - for fuzzy (d > 0) segmentation with a built-in distance, cell
+      queries resolve against the broadcast delete-neighborhood index
+      (operators/neighborhood.py).
+
+    A larger vocabulary, or a USER_PROVIDED distance at d > 0, takes the
+    relational shape: ONE ``lookup_batch`` over the corpus's distinct
+    part strings, then every scored (doc, j, i) cell shuffles into a
+    per-document ``applyInPandas`` fold.
     """
     cfg = dictionary.config
     if max_edit_distance is None:
         max_edit_distance = cfg.max_dictionary_edit_distance
     if max_segmentation_word_length is None:
         max_segmentation_word_length = dictionary.max_length
-    n_const = float(cfg.corpus_n)
-    max_word_len = max_segmentation_word_length
-
-    # the broadcast fast paths collect the whole vocabulary to the
-    # driver (fine at dictionary scale: 82k terms ~ 2MB; a 100TB-corpus
-    # vocabulary is a driver/worker-memory bottleneck) — above the
-    # limit, route to the relational shape automatically
-    broadcastable = (
-        strategy != "relational"
-        and dictionary.num_terms <= broadcast_vocab_limit
+    args = (
+        docs,
+        dictionary,
+        max_segmentation_word_length,
+        ignore_pattern,
+        float(cfg.corpus_n),
+        doc_col,
+        text_col,
     )
-    if max_edit_distance == 0 and broadcastable:
-        return _segmentation_broadcast_d0(
-            docs,
-            dictionary,
-            max_word_len,
-            ignore_pattern,
-            n_const,
-            doc_col,
-            text_col,
-        )
-    if strategy == "auto" and broadcastable:
-        return _segmentation_broadcast_fuzzy(
-            docs,
-            dictionary,
-            max_edit_distance,
-            max_word_len,
-            ignore_pattern,
-            n_const,
-            doc_col,
-            text_col,
-        )
 
+    # the broadcast paths collect the whole vocabulary to the driver
+    # (fine at dictionary scale: 82k terms ~ 2MB; a 100TB-corpus
+    # vocabulary is a driver/worker-memory bottleneck)
+    if dictionary.num_terms <= neighborhood.BROADCAST_VOCAB_LIMIT:
+        if max_edit_distance == 0:
+            return _segmentation_broadcast_d0(*args)
+        if cfg.distance_algorithm in (
+            DistanceAlgorithm.LEVENSHTEIN,
+            DistanceAlgorithm.DAMERAU_OSA,
+        ):
+            return _segmentation_broadcast_fuzzy(*args, max_edit_distance)
+    return _segmentation_relational(*args, max_edit_distance)
+
+
+def _segmentation_relational(
+    docs: DataFrame,
+    dictionary: SparkDictionary,
+    max_word_len: int,
+    ignore_pattern: str | None,
+    n_const: float,
+    doc_col: str,
+    text_col: str,
+    max_edit_distance: int,
+) -> DataFrame:
+    """Relational shape: parts explode -> shared TOP ``lookup_batch``
+    -> scored cells -> per-document ``applyInPandas`` DP."""
     norm = nfkc_strip_hyphens_udf()
     docs = docs.select(
         F.col(doc_col).alias("doc_id"), norm(F.col(text_col)).alias("phrase")
@@ -582,12 +581,12 @@ def _segmentation_broadcast_d0(
 def _segmentation_broadcast_fuzzy(
     docs: DataFrame,
     dictionary: SparkDictionary,
-    max_edit_distance: int,
     max_word_len: int,
     ignore_pattern: str | None,
     n_const: float,
     doc_col: str,
     text_col: str,
+    max_edit_distance: int,
 ) -> DataFrame:
     """Fuzzy (d > 0) fast path: worker-local SymSpell lookup inside the
     doc-local DP kernel.
@@ -612,14 +611,6 @@ def _segmentation_broadcast_fuzzy(
     )
 
     cfg = dictionary.config
-    if cfg.distance_algorithm not in (
-        DistanceAlgorithm.LEVENSHTEIN,
-        DistanceAlgorithm.DAMERAU_OSA,
-    ):
-        raise ValueError(
-            "strategy='auto' fuzzy segmentation supports the built-in "
-            "kernels; pass strategy='relational' for USER_PROVIDED"
-        )
     transpositions = cfg.distance_algorithm == DistanceAlgorithm.DAMERAU_OSA
     kernel = damerau_osa_batch if transpositions else levenshtein_batch
     d_ = max_edit_distance

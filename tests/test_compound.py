@@ -11,6 +11,7 @@ import json
 import pytest
 
 from symspellpy_spark.config import Verbosity
+from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.compound import lookup_compound_batch
 from symspellpy_spark.operators.dictionary import SparkDictionary
 
@@ -152,13 +153,15 @@ def test_empty_and_trivial_docs(spark):
     assert got[2]["term"] == "zzzz" and got[2]["distance"] == 0 and got[2]["count"] == 0
 
 
-def test_repeated_compound_no_cache_accretion(spark, en_dict_uni):
+def test_repeated_compound_no_cache_accretion(spark, en_dict_uni, monkeypatch):
     """The RELATIONAL path's shared LUT is generation-scoped: repeated
-    calls must not grow the CacheManager unboundedly. (Pinned to
-    strategy="relational": the default now routes this vocab to the
-    worker-local kernel, which persists nothing — the behavior under
-    test would silently stop executing.)"""
+    calls must not grow the CacheManager unboundedly. (Pinned to the
+    relational path by lowering BROADCAST_VOCAB_LIMIT: this vocab
+    otherwise takes the worker-local kernel, which persists nothing —
+    the behavior under test would silently stop executing.)"""
     from symspellpy_spark.operators.compound import lookup_compound_batch
+
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 0)
 
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     docs = spark.createDataFrame(
@@ -167,21 +170,17 @@ def test_repeated_compound_no_cache_accretion(spark, en_dict_uni):
     )
     before = cache_mgr.cachedData().size()
     for _ in range(3):
-        lookup_compound_batch(
-            docs, en_dict_uni, max_edit_distance=2, strategy="relational"
-        ).collect()
+        lookup_compound_batch(docs, en_dict_uni, max_edit_distance=2).collect()
     mid = cache_mgr.cachedData().size()
     # each call may keep `keep` generations per scope (compound.lut and
     # the nested lookup_batch.near), but the count must not grow per call
     for _ in range(3):
-        lookup_compound_batch(
-            docs, en_dict_uni, max_edit_distance=2, strategy="relational"
-        ).collect()
+        lookup_compound_batch(docs, en_dict_uni, max_edit_distance=2).collect()
     after = cache_mgr.cachedData().size()
     assert after <= mid, (before, mid, after)
 
 
-def test_strategies_agree(spark, en_dict_bi):
+def test_strategies_agree(spark, en_dict_bi, monkeypatch):
     """The worker-local kernel (default) and the relational staged-lookup
     path must be bit-identical — merge repairs, split repairs with and
     without bigram boost, unknown tokens, numbers/acronyms, casing."""
@@ -215,21 +214,23 @@ def test_strategies_agree(spark, en_dict_bi):
                 docs, en_dict_bi, max_edit_distance=2, **kw
             ).collect()
         }
-        rel = {
-            r["doc_id"]: (
-                r["term"],
-                r["distance"],
-                r["count"],
-                sorted((r["replacements"] or {}).items()),
-            )
-            for r in lookup_compound_batch(
-                docs, en_dict_bi, max_edit_distance=2, strategy="relational", **kw
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 0)
+            rel = {
+                r["doc_id"]: (
+                    r["term"],
+                    r["distance"],
+                    r["count"],
+                    sorted((r["replacements"] or {}).items()),
+                )
+                for r in lookup_compound_batch(
+                    docs, en_dict_bi, max_edit_distance=2, **kw
+                ).collect()
+            }
         assert fast == rel, kw
 
 
-def test_strategies_agree_no_bigrams(spark, en_dict_uni):
+def test_strategies_agree_no_bigrams(spark, en_dict_uni, monkeypatch):
     """Without a bigram dictionary the Naive-Bayes split scoring clamps
     to bigram_count_min — both strategies must take that branch alike."""
     docs = spark.createDataFrame(
@@ -242,20 +243,19 @@ def test_strategies_agree_no_bigrams(spark, en_dict_uni):
             docs, en_dict_uni, max_edit_distance=2
         ).collect()
     }
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 0)
     rel = {
         r["doc_id"]: (r["term"], r["distance"], r["count"])
         for r in lookup_compound_batch(
-            docs, en_dict_uni, max_edit_distance=2, strategy="relational"
+            docs, en_dict_uni, max_edit_distance=2
         ).collect()
     }
     assert fast == rel
 
 
-def test_vocab_limit_routes_to_relational(spark):
-    """Above broadcast_vocab_limit the auto strategy must not collect the
+def test_vocab_limit_routes_to_relational(spark, monkeypatch):
+    """Above BROADCAST_VOCAB_LIMIT the operator must not collect the
     vocabulary: the plan falls back to the relational join shape."""
-    from symspellpy_spark.operators.dictionary import SparkDictionary
-
     words = spark.createDataFrame(
         [("steam", 10), ("spark", 5), ("stream", 7)], "term string, count long"
     )
@@ -265,17 +265,10 @@ def test_vocab_limit_routes_to_relational(spark):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    fast_plan = plan(lookup_compound_batch(docs, d, max_edit_distance=1))
-    assert "MapInPandas" in fast_plan
-    assert "Join" not in fast_plan
-    rel_plan = plan(
-        lookup_compound_batch(
-            docs, d, max_edit_distance=1, broadcast_vocab_limit=2
-        )
-    )
-    assert "Join" in rel_plan
-    fast = lookup_compound_batch(docs, d, max_edit_distance=1).collect()
-    rel = lookup_compound_batch(
-        docs, d, max_edit_distance=1, broadcast_vocab_limit=2
-    ).collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in rel]
+    fast = lookup_compound_batch(docs, d, max_edit_distance=1)
+    assert "MapInPandas" in plan(fast)
+    assert "Join" not in plan(fast)
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 2)
+    rel = lookup_compound_batch(docs, d, max_edit_distance=1)
+    assert "Join" in plan(rel)
+    assert [tuple(r) for r in fast.collect()] == [tuple(r) for r in rel.collect()]

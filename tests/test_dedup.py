@@ -452,7 +452,10 @@ def test_winnowing_kernel_equals_relational(spark):
     (where utf8 gram bytes vary in length)."""
     import random
 
-    from symspellpy_spark.operators.dedup import winnowing_fingerprints
+    from symspellpy_spark.operators.dedup import (
+        _winnowing_relational,
+        winnowing_fingerprints,
+    )
 
     rng = random.Random(13)
     al = "abcdefghij "
@@ -471,8 +474,8 @@ def test_winnowing_kernel_equals_relational(spark):
         }
         rel = {
             (r["id"], r["pos"], r["fingerprint"])
-            for r in winnowing_fingerprints(
-                df, k=k, window=w, strategy="relational"
+            for r in _winnowing_relational(
+                df, k, w, "doc_id", "text", "xxhash64", positions=True
             ).collect()
         }
         assert fast == rel, (k, w, len(fast), len(rel))

@@ -119,3 +119,34 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert rows is not None and df.columns
+
+
+# per-document oracles cheap enough to replay one document at a time;
+# each scopes its documents with exactly one ``doc_id < 50`` predicate
+PER_DOC_ORACLES = ["compound_correct", "compound_noisy"]
+
+
+@pytest.mark.parametrize("threads", [1, 4])
+@pytest.mark.parametrize("name", PER_DOC_ORACLES)
+def test_oracle_full_run_equals_single_doc_runs(name, threads):
+    """A per-document oracle must not depend on which other documents
+    share its run: the full run equals the union of its single-document
+    runs, whatever the DuckDB thread count. Catches state leaking across
+    documents through how DuckDB evaluates the query."""
+    sql = entry_mod.oracle_sql()[name]
+    scope = "doc_id < 50"
+    assert sql.count(scope) == 1, name
+    con = duckdb.connect()
+    con.execute(f"SET threads = {threads}")
+    path = os.path.join(SF_DIR, "documents.parquet")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    full = con.execute(sql).fetchall()
+    ids = sorted({r[0] for r in full})
+    assert len(ids) == len(full), (name, "one row per document")
+    single = [
+        r
+        for d in ids
+        for r in con.execute(sql.replace(scope, f"doc_id = {d}")).fetchall()
+    ]
+    bad = sorted({r[0] for r in set(full) ^ set(single)})
+    assert not bad, (name, threads, bad)

@@ -168,10 +168,11 @@ def test_hash_stratified_sample_is_shuffle_free(spark):
     assert "PythonUDF" not in plan and "ArrowEval" not in plan, plan
 
 
-def test_fuzzy_segmentation_default_plan_is_join_free(spark):
+def test_fuzzy_segmentation_default_plan_is_join_free(spark, monkeypatch):
     """The worker-local fuzzy path must not plan any join or
     per-substring relation: one MapInPandas over (doc_id, phrase) rows,
     at most a round-robin repartition."""
+    from symspellpy_spark.operators import neighborhood
     from symspellpy_spark.operators.segmentation import word_segmentation_batch
 
     words = spark.createDataFrame(
@@ -182,16 +183,16 @@ def test_fuzzy_segmentation_default_plan_is_join_free(spark):
     plan = _physical(word_segmentation_batch(docs, d, max_edit_distance=1))
     assert "Join" not in plan, plan
     assert "MapInPandas" in plan, plan
-    rel_plan = _physical(
-        word_segmentation_batch(docs, d, max_edit_distance=1, strategy="relational")
-    )
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 2)
+    rel_plan = _physical(word_segmentation_batch(docs, d, max_edit_distance=1))
     assert "Join" in rel_plan  # the fallback shape really is relational
 
 
-def test_compound_default_plan_is_join_free(spark):
+def test_compound_default_plan_is_join_free(spark, monkeypatch):
     """The worker-local lookup_compound kernel must plan no token
     explode, no LUT joins and no per-document groupBy: one MapInPandas
     over (doc_id, phrase, token arrays), at most a repartition."""
+    from symspellpy_spark.operators import neighborhood
     from symspellpy_spark.operators.compound import lookup_compound_batch
 
     words = spark.createDataFrame(
@@ -203,11 +204,8 @@ def test_compound_default_plan_is_join_free(spark):
     assert "Join" not in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "MapInPandas" in plan, plan
-    rel_plan = _physical(
-        lookup_compound_batch(
-            docs, d, max_edit_distance=1, strategy="relational"
-        )
-    )
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 2)
+    rel_plan = _physical(lookup_compound_batch(docs, d, max_edit_distance=1))
     assert "Join" in rel_plan  # the fallback shape really is relational
 
 
@@ -215,7 +213,7 @@ def test_winnowing_plans_no_join(spark):
     """Production winnowing must be the doc-local kernel: one
     MapInPandas, no explode/shuffle/sort (the relational window
     formulation shuffles one row per CHARACTER). The relational
-    strategy (kept for the md5 oracle family) must itself be a window
+    path (taken by the md5 oracle family) must itself be a window
     pass, not a starts-onto-grams join whose equi-key (id, gram-hash)
     degenerates toward O(L^2) rows on boilerplate-heavy documents."""
     from symspellpy_spark.operators.dedup import winnowing_fingerprints
@@ -228,7 +226,7 @@ def test_winnowing_plans_no_join(spark):
     assert "MapInPandas" in plan, plan
     assert "Window" not in plan, plan
     rel = _physical(
-        winnowing_fingerprints(docs, k=8, window=4, strategy="relational")
+        winnowing_fingerprints(docs, k=8, window=4, hash_family="md5")
     )
     assert "Join" not in rel, rel
     assert "Window" in rel, rel

@@ -6,7 +6,10 @@ from collections import Counter
 import pytest
 
 from symspellpy_spark.operators.quality import (
+    _DEFAULT_TOKEN_RE,
     GOPHER_THRESHOLDS,
+    _ngram_stats_relational,
+    _quality_filter_relational,
     gopher_ngram_stats,
     gopher_quality_filter,
 )
@@ -212,7 +215,9 @@ def test_stats_plan_shape(spark):
     zero exchanges, zero joins."""
     df = spark.createDataFrame(_DOCS, "doc_id long, text string")
     plan = (
-        gopher_ngram_stats(df, strategy="relational")
+        _ngram_stats_relational(
+            df, range(2, 11), _DEFAULT_TOKEN_RE, "doc_id", "text"
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -259,23 +264,23 @@ def test_kernel_matches_relational(spark):
     )
     key = lambda r: (r["id"], r["n"])  # noqa: E731
     k = {key(r): tuple(r) for r in
-         gopher_ngram_stats(df, ns=ns, strategy="kernel").collect()}
-    rel = {key(r): tuple(r) for r in
-           gopher_ngram_stats(df, ns=ns, strategy="relational").collect()}
+         gopher_ngram_stats(df, ns=ns).collect()}
+    rel = {key(r): tuple(r) for r in _ngram_stats_relational(
+        df, ns, _DEFAULT_TOKEN_RE, "doc_id", "text").collect()}
     assert k == rel
     th = {"top_char_frac": {2: 0.3, 3: 0.5}, "dup_char_frac": {5: 0.2}}
-    for thresholds in (None, th):
+    for thresholds in (GOPHER_THRESHOLDS, th):
         kk = {r["id"]: r["keep"] for r in gopher_quality_filter(
-            df, thresholds=thresholds, strategy="kernel").collect()}
-        rk = {r["id"]: r["keep"] for r in gopher_quality_filter(
-            df, thresholds=thresholds, strategy="relational").collect()}
+            df, thresholds=thresholds).collect()}
+        rk = {r["id"]: r["keep"] for r in _quality_filter_relational(
+            df, thresholds, _DEFAULT_TOKEN_RE, "doc_id", "text").collect()}
         assert kk == rk and set(kk) == {d for d, _ in _tie_and_edge_docs()}
 
 
 def test_auto_strategy_gate(spark):
-    """auto uses the kernel only for the default token_re; any other
-    Java-regex pattern falls back to the relational path (Python re
-    must never see a pattern written for the JVM engine)."""
+    """The kernel runs only for the default token_re; any other
+    Java-regex pattern takes the relational path (Python re must never
+    see a pattern written for the JVM engine)."""
     df = spark.createDataFrame([(1, "a b a b c")], "doc_id long, text string")
     kplan = gopher_ngram_stats(
         df)._jdf.queryExecution().executedPlan().toString()
@@ -284,5 +289,3 @@ def test_auto_strategy_gate(spark):
         df, token_re=r"\p{L}+"
     )._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in rplan
-    with pytest.raises(ValueError):
-        gopher_ngram_stats(df, strategy="bogus")

@@ -5,7 +5,8 @@ import json
 
 import pytest
 
-from symspellpy_spark.config import EngineConfig
+from symspellpy_spark.config import DistanceAlgorithm, EngineConfig
+from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
 from symspellpy_spark.operators.segmentation import word_segmentation_batch
 
@@ -125,9 +126,9 @@ def test_live_parity_d0_fast_path(spark, en_dict2, reference_symspell_module):
     assert got[0]["distance_sum"] == exp.distance_sum
 
 
-def test_fuzzy_strategies_agree(spark, en_dict2):
-    """The broadcast-LUT fuzzy path and the relational cell-join path
-    must be bit-identical (same lookup_batch LUT, same DP)."""
+def test_fuzzy_strategies_agree(spark, en_dict2, monkeypatch):
+    """The worker-local fuzzy path and the relational cell-join path
+    must be bit-identical (same TOP semantics, same DP)."""
     docs = spark.createDataFrame(
         [
             (1, "thequickbrownfoxjumpsoverthelazydog"),
@@ -147,16 +148,18 @@ def test_fuzzy_strategies_agree(spark, en_dict2):
                 docs, en_dict2, max_edit_distance=dd
             ).collect()
         }
-        rel = {
-            r["doc_id"]: tuple(r[c] for c in cols[1:])
-            for r in word_segmentation_batch(
-                docs, en_dict2, max_edit_distance=dd, strategy="relational"
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 0)
+            rel = {
+                r["doc_id"]: tuple(r[c] for c in cols[1:])
+                for r in word_segmentation_batch(
+                    docs, en_dict2, max_edit_distance=dd
+                ).collect()
+            }
         assert fast == rel, dd
 
 
-def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2):
+def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2, monkeypatch):
     """ignore_pattern must behave identically in the worker-local and
     relational fuzzy paths (exact-hit-beats-ignore ordering included)."""
     docs = spark.createDataFrame(
@@ -169,22 +172,18 @@ def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2):
         r["doc_id"]: tuple(r[c] for c in cols)
         for r in word_segmentation_batch(docs, en_dict2, **kw).collect()
     }
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 0)
     rel = {
         r["doc_id"]: tuple(r[c] for c in cols)
-        for r in word_segmentation_batch(
-            docs, en_dict2, strategy="relational", **kw
-        ).collect()
+        for r in word_segmentation_batch(docs, en_dict2, **kw).collect()
     }
     assert fast == rel
 
 
-def test_vocab_limit_routes_to_relational(spark):
-    """Above broadcast_vocab_limit the auto strategy must NOT collect
-    the vocabulary to the driver: the plan switches to the relational
+def test_vocab_limit_routes_to_relational(spark, monkeypatch):
+    """Above BROADCAST_VOCAB_LIMIT the operator must NOT collect the
+    vocabulary to the driver: the plan switches to the relational
     shape (joins) and results stay identical."""
-    from symspellpy_spark.operators.dictionary import SparkDictionary
-    from symspellpy_spark.operators.segmentation import word_segmentation_batch
-
     words = spark.createDataFrame(
         [("steam", 10), ("spark", 5), ("stream", 7), ("par", 3)],
         "term string, count long",
@@ -197,14 +196,51 @@ def test_vocab_limit_routes_to_relational(spark):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
+    cols = ["doc_id", "segmented_string", "corrected_string", "distance_sum"]
     for dist in (0, 1):
         fast = word_segmentation_batch(docs, d, max_edit_distance=dist)
-        routed = word_segmentation_batch(
-            docs, d, max_edit_distance=dist, broadcast_vocab_limit=2
-        )
         assert "Join" not in plan(fast)
+        fast_rows = sorted(map(tuple, fast.select(cols).collect()))
+        with monkeypatch.context() as m:
+            m.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 2)
+            routed = word_segmentation_batch(docs, d, max_edit_distance=dist)
         assert "Join" in plan(routed), dist
-        cols = ["doc_id", "segmented_string", "corrected_string", "distance_sum"]
-        assert sorted(map(tuple, fast.select(cols).collect())) == sorted(
-            map(tuple, routed.select(cols).collect())
-        ), dist
+        assert fast_rows == sorted(map(tuple, routed.select(cols).collect())), dist
+
+
+def test_user_provided_fuzzy_routes_to_relational(spark):
+    """A USER_PROVIDED distance has no worker-local kernel, so fuzzy
+    segmentation takes the relational path by itself. A callable that
+    computes Levenshtein returns the built-in Levenshtein's rows."""
+    from symspellpy_spark.functions.distance import levenshtein_batch
+
+    def comparer(s1, s2, max_distance):
+        return levenshtein_batch(s1, s2, max_distance)
+
+    words = spark.createDataFrame(
+        [("steam", 10), ("spark", 5), ("stream", 7), ("par", 3)],
+        "term string, count long",
+    )
+    docs = spark.createDataFrame(
+        [(1, "steamsparc"), (2, "sparkpar"), (3, "")], "doc_id long, text string"
+    )
+    user = SparkDictionary.from_words(
+        spark,
+        words,
+        config=EngineConfig(
+            distance_algorithm=DistanceAlgorithm.USER_PROVIDED,
+            distance_comparer=comparer,
+        ),
+    )
+    builtin = SparkDictionary.from_words(
+        spark,
+        words,
+        config=EngineConfig(distance_algorithm=DistanceAlgorithm.LEVENSHTEIN),
+    )
+    cols = ["doc_id", "segmented_string", "corrected_string", "distance_sum"]
+    got = word_segmentation_batch(docs, user, max_edit_distance=1)
+    assert "Join" in got._jdf.queryExecution().executedPlan().toString()
+    want = word_segmentation_batch(docs, builtin, max_edit_distance=1)
+    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+        map(tuple, want.select(cols).collect())
+    )
