@@ -560,10 +560,10 @@ def main() -> None:
         from symspellpy_spark.plans.pipeline import DedupConfig, DedupPipeline
 
         def _run_winnow_pipeline():
-            # same collect_metrics setting as run_pipeline (default on),
+            # same pipeline as run_pipeline plus the winnowing source,
             # so the 5-source vs 4-source per-doc rates compare
-            # like-for-like (the per-source tally rides the row-count
-            # job — no extra pass either way)
+            # like-for-like (the per-source tally rides the verify
+            # action's observation — no extra pass either way)
             pipe = DedupPipeline(
                 spark,
                 DedupConfig(use_winnowing=True, winnow_k=16, winnow_window=8),

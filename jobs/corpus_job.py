@@ -160,18 +160,11 @@ def run_corpus_stages(
 
     surv = _staged("url_dedup", _url)
 
-    # 1. near-duplicate removal (one survivor per dup cluster).
-    # collect_metrics=False: this job's observability is the per-stage
-    # survivor counts below — the pipeline's own per-stage row/source
-    # tallies would cost one extra scan job per internal stage and
-    # nobody reads them here
+    # 1. near-duplicate removal (one survivor per dup cluster). This
+    # job reports the per-stage survivor counts below; the pipeline's
+    # own per-stage tallies ride on these actions and cost no job
     def _dedup():
-        pipe = DedupPipeline(
-            spark,
-            DedupConfig(),
-            checkpoint_dir=checkpoint,
-            collect_metrics=False,
-        )
+        pipe = DedupPipeline(spark, DedupConfig(), checkpoint_dir=checkpoint)
         surv_urls = pipe.survivors(surv)
         return surv.join(surv_urls, "url", "left_semi")
 

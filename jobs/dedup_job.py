@@ -62,12 +62,6 @@ def main(argv=None) -> None:
         help="add the winnowing (MOSS) local-match sweep to candidate sources",
     )
     ap.add_argument("--winnow-k", type=int, default=8)
-    ap.add_argument(
-        "--no-fuse-candidates",
-        action="store_true",
-        help="disable the fused substring/exact candidate sources "
-        "(legacy per-source text scans)",
-    )
     ap.add_argument("--winnow-window", type=int, default=4)
     ap.add_argument("--cores", default=None)
     args = ap.parse_args(argv)
@@ -93,7 +87,6 @@ def main(argv=None) -> None:
         use_winnowing=args.use_winnowing,
         winnow_k=args.winnow_k,
         winnow_window=args.winnow_window,
-        fuse_candidates=not args.no_fuse_candidates,
     )
     pipe = DedupPipeline(spark, cfg, checkpoint_dir=args.checkpoint)
     t0 = time.perf_counter()
@@ -109,7 +102,8 @@ def main(argv=None) -> None:
         # count the WRITTEN output: counting the logical plan would
         # re-execute the canonical-selection join against pages
         n_surv = spark.read.parquet(surv_path).count()
-    # fresh metrics_df: the survivors metric (if any) lands after run()
+    # metrics_df after the writes: each stage's counts arrive with the
+    # action that first runs it
     pipe.metrics_df().write.mode("overwrite").parquet(
         os.path.join(args.output, "metrics")
     )

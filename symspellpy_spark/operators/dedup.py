@@ -38,7 +38,6 @@ __all__ = [
     "unpack_hashes",
     "normalized_tokens",
     "shingles",
-    "combined_signatures",
     "tokens_to_signatures",
     "text_to_signatures",
     "minhash_signatures",
@@ -267,37 +266,6 @@ def minhash_signatures(
         return pd.Series(list(mh.tolist()), index=hashes.index)
 
     return df.withColumn("minhash", _minhash(F.col(hashes_col)))
-
-
-def combined_signatures(
-    df: DataFrame,
-    num_perm: int = 128,
-    seed: int = 1337,
-    hashes_col: str = "shingle_hashes",
-) -> DataFrame:
-    """Add ``minhash array<long>`` AND ``simhash long`` in ONE fused
-    pandas UDF — a single Arrow crossing for the (wide) shingle-hash
-    arrays instead of two chained UDF stages. Semantics identical to
-    minhash_signatures + simhash_signatures(hashes_col=...).
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    a, b = _minhash_params(num_perm, seed)
-    out_type = StructType(
-        [
-            StructField("minhash", ArrayType(LongType())),
-            StructField("simhash", LongType()),
-        ]
-    )
-
-    @F.pandas_udf(out_type)
-    def _sig(hashes: pd.Series) -> pd.DataFrame:
-        mh, sh = _sig_kernel(hashes, num_perm, a, b)
-        return pd.DataFrame({"minhash": list(mh.tolist()), "simhash": sh})
-
-    return df.withColumn("_sig", _sig(F.col(hashes_col))).select(
-        "*", F.col("_sig.minhash").alias("minhash"), F.col("_sig.simhash").alias("simhash")
-    ).drop("_sig")
 
 
 def _fmix64(h: np.ndarray) -> np.ndarray:
@@ -828,8 +796,8 @@ def text_to_shingle_hashes(
     """(id, shingle_hashes) — the fused kernel's shingle sets alone.
 
     The verify-phase-2 re-derivation used when signature checkpoints
-    drop the fat ``shingle_hashes`` column (DedupConfig
-    checkpoint_shingles=False): one tokenize+shingle Arrow pass over
+    drop the fat ``shingle_hashes`` column (every DedupPipeline disk
+    checkpoint): one tokenize+shingle Arrow pass over
     text, no MinHash/SimHash/band work. Hash-identical to the
     ``shingle_hashes`` the full kernel emits (same code path), and
     independent of (num_perm, seed), which only parameterize MinHash.

@@ -11,7 +11,9 @@ checkpoint tables (Iceberg-shaped: data + a properties JSON carrying
 config and stage lineage); a rerun with the same ``checkpoint_dir``
 resumes from the newest complete stage instead of recomputing
 (the save_pickle/load_pickle analogue, reference pickle_mixin.py).
-Per-stage row counts land in a ``metrics`` table.
+Per-stage row counts land in a ``metrics`` table: each stage's relation
+carries a ``DataFrame.observe`` count that the action which first runs
+the stage fills in, so metrics launch no job of their own.
 
 Invariant (BASELINE.json input_hint): extracted ``text`` is carried
 byte-identically per url — the pipeline only ever *reads* it.
@@ -24,7 +26,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from symspellpy_spark.config import EngineConfig, Verbosity
 from symspellpy_spark.operators.cluster import connected_components
@@ -33,11 +35,8 @@ from symspellpy_spark.operators.dedup import (
     exact_duplicates_from_hash,
     jaccard_verify,
     lsh_candidate_pairs,
-    minhash_signatures,
     normalized_tokens,
-    shingles,
     simhash_candidate_pairs,
-    simhash_signatures,
     substring_fingerprint_pairs,
     substring_pairs_from_grams,
     winnowing_candidate_pairs,
@@ -64,6 +63,8 @@ SRC_SUBSTRING = "substring"
 SRC_EXACT = "exact"
 SRC_WINNOW = "winnowing"
 CANDIDATE_SOURCES = (SRC_LSH, SRC_SIMHASH, SRC_SUBSTRING, SRC_EXACT)
+
+CHECKPOINT_CODEC = "zstd"
 
 
 @dataclass
@@ -94,35 +95,30 @@ class DedupConfig:
     use_winnowing: bool = False
     winnow_k: int = 8
     winnow_window: int = 4
-    # False (default): a DISK signatures checkpoint stores only
-    # (id, minhash packed as 1KB binary, simhash, bands) with zstd —
-    # the fat shingle_hashes column (the majority of signature bytes)
-    # is re-derived by a shingles-only kernel pass at verify phase 2,
-    # where only estimate-surviving pairs ever read it. True restores
-    # the legacy full-width checkpoint (pay bytes, skip the re-derive).
-    # In-memory runs (no checkpoint_dir) always keep the full row: RAM
-    # re-reads are nearly free, so re-deriving would only cost.
-    checkpoint_shingles: bool = False
-    checkpoint_codec: str = "zstd"
-    # True (default): the signature kernel also emits the substring
-    # sample grams (sub_grams) and a 64-bit full-text content hash
-    # (text_hash), and candidate generation derives the substring +
-    # exact sources from the signatures relation instead of re-scanning
-    # text. The batch path then reads corpus text exactly ONCE (the
-    # signature pass; narrow-checkpoint runs add the survivors-only
-    # shingle re-derive at verify, and winnowing — if enabled — its own
-    # kernel pass). Only the common text_to_signatures path fuses; the
-    # normalize_tokens path keeps the legacy per-source scans.
+    # Signature checkpoints: a DISK checkpoint stores only (id, minhash
+    # packed as 1KB binary, simhash, bands, and on the text path the
+    # fused source columns below) with zstd — the fat shingle_hashes
+    # column (the majority of signature bytes) is re-derived by a
+    # shingles-only kernel pass at verify phase 2, where only
+    # estimate-surviving pairs ever read it. In-memory runs (no
+    # checkpoint_dir) keep the full row: RAM re-reads are nearly free,
+    # so re-deriving would only cost.
+    #
+    # Candidate sources: on the text path the signature kernel also
+    # emits the substring sample grams (sub_grams) and a 64-bit
+    # full-text content hash (text_hash), and the substring + exact
+    # sources derive from the signatures relation instead of re-scanning
+    # text, so the batch path reads corpus text once (narrow-checkpoint
+    # runs add the survivors-only shingle re-derive at verify, and
+    # winnowing its own kernel pass). The dictionary-normalized token
+    # path (normalize_tokens) keeps the per-source text scans.
     # Winnowing is deliberately NOT fused: its fingerprint density is
     # 2/(winnow_window+1) per character — ~1.8-3.2 BYTES of int64
     # fingerprints per text byte at the shipped configs — so carrying
     # them on the signatures relation would make every signature
     # checkpoint/localCheckpoint 2-3x wider than the text it summarizes
-    # to save one scan; the dedicated doc-local kernel pass is the
-    # cheaper shape at any scale where the checkpoint is ever written.
-    fuse_candidates: bool = True
+    # to save one scan.
     normalize_tokens: bool = False
-    normalize_min_count: int = 0  # only correct tokens rarer than this
     engine: EngineConfig = field(default_factory=EngineConfig)
 
     def to_json(self) -> str:
@@ -142,14 +138,14 @@ class DedupPipeline:
         config: DedupConfig | None = None,
         dictionary: SparkDictionary | None = None,
         checkpoint_dir: str | None = None,
-        collect_metrics: bool = True,
     ):
         self.spark = spark
         self.config = config or DedupConfig()
         self.dictionary = dictionary
-        self.collect_metrics = collect_metrics
         self.checkpoint_dir = checkpoint_dir
-        self.metrics: list[dict] = []
+        self._metrics: list[dict] = []
+        # (stage, Observation) pairs whose action has not run yet
+        self._observed: list[tuple[str, Observation]] = []
         self._memo: dict[str, DataFrame] = {}
         if checkpoint_dir is not None:
             from symspellpy_spark.sources.catalog import TableCatalog
@@ -182,49 +178,43 @@ class DedupPipeline:
             df,
             stage,
             {"config": self.config.to_json(), "stage": stage},
-            compression=self.config.checkpoint_codec,
+            compression=CHECKPOINT_CODEC,
         )
 
-    def _metric_count(
-        self, stage: str, df: DataFrame, sources: list[str] | None = None
-    ) -> None:
-        """Row-count + per-partition lineage metrics — extra jobs;
-        skipped when metrics are off (e.g. throughput benchmarking,
-        where the caller counts anyway).
+    def _observe(self, stage: str, df: DataFrame, *extra: Column) -> DataFrame:
+        """``df`` carrying the stage's ``rows`` count (and the ``extra``
+        aggregates), filled in by the first action that runs it — no
+        job of its own.
 
-        ``sources``: names to tally from an array ``sources`` column —
-        folded into the SAME per-partition aggregation (one job, a few
-        extra map-side sums), so per-source recall attribution costs no
-        additional pass over the relation."""
-        if not self.collect_metrics:
-            return
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for s in sources or ():
-            aggs.append(
-                F.sum(F.array_contains("sources", s).cast("long")).alias(
-                    f"_src_{s}"
-                )
-            )
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(*aggs)
-            .collect()
-        )
-        total = 0
-        for r in per_part:
-            self._metric(stage, f"partition_{r['pid']}_rows", r["_rows"])
-            total += r["_rows"]
-        self._metric(stage, "rows", total)
-        self._metric(stage, "partitions", len(per_part))
-        for s in sources or ():
-            self._metric(
-                stage,
-                f"source_{s}_pairs",
-                sum(r[f"_src_{s}"] or 0 for r in per_part),
-            )
+        An Observation keeps what its FIRST action computed, and a
+        ``localCheckpoint(eager=False)`` is an action that computes
+        nothing above its last exchange: observed rows fed straight into
+        a lazy checkpoint report 0. So each stage observes the relation
+        it returns, above its own lazy checkpoint, and a lazy
+        checkpoint taken over a stage's output (the narrow signatures)
+        reads the unobserved relation."""
+        obs = Observation()
+        self._observed.append((stage, obs))
+        return df.observe(obs, F.count(F.lit(1)).alias("rows"), *extra)
+
+    @property
+    def metrics(self) -> list[dict]:
+        """``{stage, metric, value, ts}`` rows recorded so far. A stage's
+        counts appear once an action has run the stage; observations
+        still waiting for one are skipped (``Observation.get`` would
+        block until an action runs)."""
+        waiting = []
+        for stage, obs in self._observed:
+            if obs._jo.future().isCompleted():
+                for name, value in obs.get.items():
+                    self._metric(stage, name, value)
+            else:
+                waiting.append((stage, obs))
+        self._observed = waiting
+        return self._metrics
 
     def _metric(self, stage: str, name: str, value) -> None:
-        self.metrics.append(
+        self._metrics.append(
             {"stage": stage, "metric": name, "value": float(value), "ts": time.time()}
         )
 
@@ -302,14 +292,14 @@ class DedupPipeline:
         cached = self._load_ckpt("signatures")
         if cached is not None:
             cached = self._unpack_sig(cached)
-            self._memo["signatures"] = cached
+            self._memo["signatures"] = self._memo["sig_plain"] = cached
             return cached
         from symspellpy_spark.operators.dedup import (
             text_to_signatures,
             tokens_to_signatures,
         )
 
-        # narrow persisted relation (default): shingle_hashes is the
+        # narrow persisted relation: shingle_hashes is the
         # majority of signature bytes and its ONLY consumer is verify
         # phase 2 (which re-derives it for estimate survivors), and
         # neither the RDD localCheckpoint nor a parquet scan
@@ -322,12 +312,10 @@ class DedupPipeline:
         # from executor RAM nearly for free — measured at 60k docs,
         # re-deriving shingles at verify costs +8s of edges time and
         # saves nothing on the in-memory signatures stage
-        narrow = (
-            self.checkpoint_dir is not None
-            and not self.config.checkpoint_shingles
-        )
         narrow_kw = (
-            {"emit_shingles": False, "pack_minhash": True} if narrow else {}
+            {"emit_shingles": False, "pack_minhash": True}
+            if self.checkpoint_dir is not None
+            else {}
         )
         if self.config.normalize_tokens and self.dictionary is not None:
             # dictionary-corrected tokens exist as a real relation
@@ -341,32 +329,25 @@ class DedupPipeline:
             )
         else:
             # common path: tokenize inside the signature kernel — the
-            # token-string relation (10-100x the text bytes) never exists
-            fuse_kw = (
-                {
-                    "substring_gram_len": self.config.substring_gram_len,
-                    "substring_sample_mod": self.config.substring_sample_mod,
-                    "emit_text_hash": True,
-                }
-                if self.config.fuse_candidates
-                else {}
-            )
+            # token-string relation (10-100x the text bytes) never exists;
+            # the kernel also emits the fused substring/exact source columns
             sig = text_to_signatures(
                 self._pages64(pages),
                 k=self.config.shingle_k,
                 num_perm=self.config.num_perm,
                 seed=self.config.minhash_seed,
                 n_bands=self.config.bands,
+                substring_gram_len=self.config.substring_gram_len,
+                substring_sample_mod=self.config.substring_sample_mod,
+                emit_text_hash=True,
                 **narrow_kw,
-                **fuse_kw,
             )
         if self.checkpoint_dir is None:
             sig = sig.localCheckpoint(eager=False)
-        sig = self._save_ckpt("signatures", sig)
-        sig = self._unpack_sig(sig)
-        self._metric_count("signatures", sig)
-        self._memo["signatures"] = sig
-        return sig
+        sig = self._unpack_sig(self._save_ckpt("signatures", sig))
+        self._memo["sig_plain"] = sig
+        self._memo["signatures"] = self._observe("signatures", sig)
+        return self._memo["signatures"]
 
     def _unpack_sig(self, sig: DataFrame) -> DataFrame:
         if "minhash_bin" not in sig.columns:
@@ -390,7 +371,8 @@ class DedupPipeline:
         full shingle+minhash payload (~2-3KB/doc) once per consumer;
         the narrow relation is ~50B/doc."""
         if "sig_narrow" not in self._memo:
-            narrow = self.signatures(pages).select("id", "bands", "simhash")
+            self.signatures(pages)
+            narrow = self._memo["sig_plain"].select("id", "bands", "simhash")
             if self.checkpoint_dir is None:
                 narrow = narrow.localCheckpoint(eager=False)
             self._memo["sig_narrow"] = narrow
@@ -497,14 +479,18 @@ class DedupPipeline:
             self._memo["edges"] = cached
             return cached
         sig = self.signatures(pages)
-        pairs = self.candidate_pairs(pages).localCheckpoint(eager=False)
         # per-source recall attribution (a pair found by two sources
-        # counts toward both) rides the row-count job — no extra pass
-        self._metric_count(
+        # counts toward both) rides the same observation as the rows
+        sources = CANDIDATE_SOURCES + (
+            (SRC_WINNOW,) if self.config.use_winnowing else ()
+        )
+        pairs = self._observe(
             "candidates",
-            pairs,
-            sources=list(CANDIDATE_SOURCES)
-            + ([SRC_WINNOW] if self.config.use_winnowing else []),
+            self.candidate_pairs(pages).localCheckpoint(eager=False),
+            *[
+                F.count_if(F.array_contains("sources", s)).alias(f"source_{s}_pairs")
+                for s in sources
+            ],
         )
         hashes_df = None
         if "shingle_hashes" not in sig.columns:
@@ -533,10 +519,8 @@ class DedupPipeline:
         edges = verified.unionByName(containment)
         if self.checkpoint_dir is None:
             edges = edges.localCheckpoint(eager=False)
-        edges = self._save_ckpt("edges", edges)
-        self._metric_count("edges", edges)
-        self._memo["edges"] = edges
-        return edges
+        self._memo["edges"] = self._observe("edges", self._save_ckpt("edges", edges))
+        return self._memo["edges"]
 
     def clusters(self, pages: DataFrame, include_singletons: bool = False) -> DataFrame:
         e = self.edges(pages)
@@ -547,13 +531,12 @@ class DedupPipeline:
         # 10^12 docs this is a shuffle join and correctly so)
         cl = cl.join(self._id_map(pages), "id").select("url", "cluster_id")
         # the output is narrow (url, cluster_id) but NOT a memoized
-        # stage: without a checkpoint every consumer — the metric pass
-        # below, a caller's count, survivors() — re-executes the
-        # url-map join and the label scan once each
+        # stage: without a checkpoint every consumer — a caller's
+        # count, survivors() — re-executes the url-map join and the
+        # label scan once each
         if self.checkpoint_dir is None:
             cl = cl.localCheckpoint(eager=False)
-        self._metric_count("clusters", cl)
-        return cl
+        return self._observe("clusters", cl)
 
     def survivors(self, pages: DataFrame) -> DataFrame:
         """The deduplicated corpus: one url per surviving page — every
@@ -566,15 +549,15 @@ class DedupPipeline:
         from symspellpy_spark.operators.cluster import select_canonical
 
         cl = self.clusters(pages)
-        out = select_canonical(pages, cl, id_col="url")
-        self._metric_count("survivors", out)
-        return out
+        return self._observe("survivors", select_canonical(pages, cl, id_col="url"))
 
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
+        """The stage outputs. Their counts reach ``metrics`` /
+        ``metrics_df()`` as actions run them, so read those after
+        acting on the outputs."""
         clusters = self.clusters(pages)
         return {
             "signatures": self.signatures(pages),
             "edges": self.edges(pages),
             "clusters": clusters,
-            "metrics": self.metrics_df(),
         }

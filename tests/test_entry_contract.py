@@ -121,13 +121,25 @@ def test_entry_smoke(spark):
     assert rows is not None and df.columns
 
 
-# per-document oracles cheap enough to replay one document at a time;
-# each scopes its documents with exactly one ``doc_id < 50`` predicate
-PER_DOC_ORACLES = ["compound_correct", "compound_noisy"]
+# per-document oracles, each scoping its documents with exactly one
+# ``doc_id < 50`` predicate, and the DuckDB thread counts to run them at
+PER_DOC_ORACLES = [
+    ("compound_correct", 1),
+    ("compound_correct", 4),
+    ("compound_noisy", 1),
+    ("compound_noisy", 4),
+    ("word_segmentation", 4),
+    ("word_segmentation_fuzzy", 4),
+]
+# replaying all 50 documents one at a time takes 150-325 s for the
+# segmentation oracles, so they replay this fixed subset (it holds the
+# documents where compound_noisy's list_reduce once leaked); the
+# compound oracles replay every document
+SUBSET_ORACLES = {"word_segmentation", "word_segmentation_fuzzy"}
+REPLAY_SUBSET = (1, 7, 16, 24, 27, 34, 41, 47)
 
 
-@pytest.mark.parametrize("threads", [1, 4])
-@pytest.mark.parametrize("name", PER_DOC_ORACLES)
+@pytest.mark.parametrize("name,threads", PER_DOC_ORACLES)
 def test_oracle_full_run_equals_single_doc_runs(name, threads):
     """A per-document oracle must not depend on which other documents
     share its run: the full run equals the union of its single-document
@@ -143,9 +155,12 @@ def test_oracle_full_run_equals_single_doc_runs(name, threads):
     full = con.execute(sql).fetchall()
     ids = sorted({r[0] for r in full})
     assert len(ids) == len(full), (name, "one row per document")
+    replayed = REPLAY_SUBSET if name in SUBSET_ORACLES else ids
+    assert set(replayed) <= set(ids), (name, replayed)
+    full = [r for r in full if r[0] in set(replayed)]
     single = [
         r
-        for d in ids
+        for d in replayed
         for r in con.execute(sql.replace(scope, f"doc_id = {d}")).fetchall()
     ]
     bad = sorted({r[0] for r in set(full) ^ set(single)})

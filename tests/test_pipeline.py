@@ -2,6 +2,8 @@
 dup-pair recall >= 0.99 at identical shingle/signature config, checkpoint
 resume, and the byte-identical-text invariant."""
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,9 +55,24 @@ def test_dup_pair_recall(spark, pages):
     recall_truth = found_truth / len(truth)
     assert recall_truth >= 0.99, recall_truth
 
-    # metrics table populated
-    stages = {r["stage"] for r in out["metrics"].collect()}
+    # metrics table populated by the actions above: each stage's rows
+    # equal a count of the relation it returned
+    stages = {r["stage"] for r in pipe.metrics_df().collect()}
     assert {"signatures", "candidates", "edges", "clusters"} <= stages
+    rows = {m["stage"]: m["value"] for m in pipe.metrics if m["metric"] == "rows"}
+    assert rows["signatures"] == out["signatures"].count() == pages.count()
+    assert rows["candidates"] == pipe.candidate_pairs(pages).count() > 0
+    assert rows["edges"] == out["edges"].count() > 0
+    assert rows["clusters"] == out["clusters"].count() > 0
+
+
+def _metrics_returns_at_once(pipe):
+    got = []
+    reader = threading.Thread(target=lambda: got.append(pipe.metrics), daemon=True)
+    reader.start()
+    reader.join(timeout=30)
+    assert not reader.is_alive(), "reading metrics waited for an action"
+    return got[0]
 
 
 def test_checkpoint_resume(spark, pages, tmp_path):
@@ -193,13 +210,25 @@ def test_per_source_pair_metrics_recorded(spark):
     ] + [(f"u{i}", rand_text(800)) for i in range(5, 9)]
     pages = spark.createDataFrame(rows, "url string, text string")
     pipe = DedupPipeline(spark, DedupConfig(use_winnowing=True))
-    pipe.edges(pages).count()
+    # no action has run the signatures yet: nothing recorded, no wait
+    pipe.signatures(pages)
+    assert _metrics_returns_at_once(pipe) == []
+    edges = pipe.edges(pages)
+    edges.count()
     by_metric = {
         (m["stage"], m["metric"]): m["value"] for m in pipe.metrics
     }
     assert by_metric.get(("candidates", "source_winnowing_pairs"), 0) >= 1
     assert by_metric.get(("candidates", "source_exact_pairs"), 0) >= 1
     assert by_metric.get(("candidates", "source_minhash_lsh_pairs"), 0) >= 1
+    # each tally equals a brute count over the candidate relation
+    cands = pipe.candidate_pairs(pages).collect()
+    for s in ("minhash_lsh", "simhash", "substring", "exact", "winnowing"):
+        brute = sum(s in r["sources"] for r in cands)
+        assert by_metric[("candidates", f"source_{s}_pairs")] == brute, s
+    assert by_metric[("candidates", "rows")] == len(cands)
+    assert by_metric[("signatures", "rows")] == pipe.signatures(pages).count() == 8
+    assert by_metric[("edges", "rows")] == edges.count()
 
 
 def test_salted_cap_recovers_hot_band_candidates(spark, pages):
@@ -232,51 +261,44 @@ def test_salted_cap_recovers_hot_band_candidates(spark, pages):
 
 
 def test_narrow_signature_checkpoint_bytes_and_equivalence(spark, pages, tmp_path):
-    """The default (narrow, zstd, packed-minhash) signatures checkpoint
-    must (a) be substantially smaller on disk than the legacy full
-    checkpoint and (b) leave every pipeline output identical — the
-    shingle sets re-derived at verify phase 2 are hash-identical to the
-    ones the legacy checkpoint stored."""
-    import os
-
-    def du(path):
-        total = 0
-        for root, _, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
+    """A disk signatures checkpoint stores the narrow row (packed
+    minhash, no shingle sets) and leaves every pipeline output identical
+    to an in-memory run, which keeps the shingle sets — the sets
+    re-derived at verify phase 2 are hash-identical to the kept
+    ones."""
     narrow_dir = str(tmp_path / "ck_narrow")
-    full_dir = str(tmp_path / "ck_full")
     p_narrow = DedupPipeline(
         spark, DedupConfig(), checkpoint_dir=narrow_dir
     )
-    p_full = DedupPipeline(
-        spark,
-        DedupConfig(checkpoint_shingles=True, checkpoint_codec="snappy"),
-        checkpoint_dir=full_dir,
-    )
+    p_mem = DedupPipeline(spark, DedupConfig())
     out_n = {
         (r["url"], r["cluster_id"])
         for r in p_narrow.run(pages)["clusters"].collect()
     }
-    out_f = {
+    out_m = {
         (r["url"], r["cluster_id"])
-        for r in p_full.run(pages)["clusters"].collect()
+        for r in p_mem.run(pages)["clusters"].collect()
     }
-    assert out_n == out_f and len(out_n) > 0
-    b_narrow = du(os.path.join(narrow_dir, "signatures"))
-    b_full = du(os.path.join(full_dir, "signatures"))
-    assert b_narrow < 0.55 * b_full, (b_narrow, b_full)
+    assert out_n == out_m and len(out_n) > 0
+    stored = p_narrow._catalog.load("signatures")
+    assert "minhash_bin" in stored.columns
+    assert "shingle_hashes" not in stored.columns
+    assert "shingle_hashes" in p_mem.signatures(pages).columns
 
 
 def test_fused_candidates_equal_legacy(spark, pages):
-    """fuse_candidates=True (default: substring grams + text hash come
-    out of the signature kernel) must produce identical edges and
-    clusters to the legacy per-source text scans — the shared
-    _ContentHasher guarantees identical gram hash values on ASCII
-    text."""
+    """The fused sources (substring grams + text hash come out of the
+    signature kernel) must produce identical edges and clusters to the
+    per-source text scans, which candidate_pairs takes when the
+    signatures carry no fused columns (the dictionary-normalized token
+    path) — the shared _ContentHasher guarantees identical gram hash
+    values on ASCII text."""
     out_f = DedupPipeline(spark, DedupConfig()).run(pages)
-    out_l = DedupPipeline(spark, DedupConfig(fuse_candidates=False)).run(pages)
+    legacy = DedupPipeline(spark, DedupConfig())
+    fused_sig = legacy.signatures
+    legacy.signatures = lambda p: fused_sig(p).drop("sub_grams", "text_hash")
+    out_l = legacy.run(pages)
+    assert "sub_grams" not in out_l["signatures"].columns
     edges_f = {
         (r["id_a"], r["id_b"], tuple(sorted(r["sources"])))
         for r in out_f["edges"].collect()
@@ -295,7 +317,7 @@ def test_fused_candidates_read_no_text(spark, pages):
     """After the signatures relation is materialized, fused candidate
     generation is pure Catalyst over it: no Python/Arrow stage and no
     re-scan of the pages text column anywhere in the plan."""
-    pipe = DedupPipeline(spark, DedupConfig(), collect_metrics=False)
+    pipe = DedupPipeline(spark, DedupConfig())
     pipe.signatures(pages).count()  # materialize the localCheckpoint
     plan = (
         pipe.candidate_pairs(pages)
